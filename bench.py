@@ -151,16 +151,12 @@ BENCH_QUERIES = [
     "daily_event_anomaly",
     # round 5 (additive — the set above is stable for regression
     # reads): hybrid RRF fusion (BM25 + cosine arms); MMR diversified
-    # re-rank, PRIMARY = the grouped-map strategy (r06 role flip,
-    # matching the driver window): the whole greedy loop runs per
-    # query group in ONE cogrouped-Arrow job — the scale-right plan
+    # re-rank — the whole greedy loop runs per query group in ONE
+    # cogrouped-Arrow job. Both MMR names run the one implementation
+    # (operators/retrieval.mmr_select); both stay so the query set
+    # is stable for regression reads.
     "hybrid_doc_retrieval",
     "mmr_diverse_rerank_grouped",
-    # its plan-flat twin (same oracle), retained as the A/B: k
-    # driver-coordinated steps x eager localCheckpoint barriers —
-    # quantifies what fixed per-job latency costs the iterative
-    # strategy (the pq_topk/ivfpq_store_topk pattern, applied to
-    # driver-coordinated iteration instead of index amortization)
     "mmr_diverse_rerank",
     # round 9 (additive): the compressed-codec path — JVM-side PNG
     # encode (filters/zlib/CRCs as one projection) -> stdlib-zlib
@@ -316,7 +312,7 @@ def _build_dedup_store(spark, sf_dir: str):
     tmpdir = tempfile.mkdtemp(prefix="bench_dedup_")
     cat = ManifestCatalog(spark, f"file://{tmpdir}/lake")
     # plain (unbucketed) mode: the r07 crossover study (SCALE.md,
-    # scripts/dedup_crossover_study.py) measured plain vs
+    # "Dedup-store crossover") measured plain vs
     # band_buckets=16 at 4.7k/47k/142k signature rows — plain wins
     # at every point through 30x (1.25/1.13/1.89s vs
     # 1.46/2.10/2.11s warm): the probe is stage-overhead-dominated

@@ -228,12 +228,10 @@ def _mmr_frames(
     vec_col: str,
     rel_col: str,
 ) -> Tuple[DataFrame, DataFrame]:
-    """Shared prep for both MMR execution strategies: the normalized
-    candidate frame (``__q,__id,__rel,__v,__n``) and the per-query
-    pairwise cosine frame (``__q,__ida,__idb,__sim`` — 6dp-rounded,
-    self-pairs excluded).  One home for the similarity expressions so
-    the plan-flat and grouped-map paths are bit-identical by
-    construction."""
+    """MMR prep: the normalized candidate frame
+    (``__q,__id,__rel,__v,__n``) and the per-query pairwise cosine
+    frame (``__q,__ida,__idb,__sim`` — 6dp-rounded, self-pairs
+    excluded), both computed in the JVM."""
     v = F.col(vec_col).cast("array<double>")
     base = candidates.select(
         F.col(query_col).alias("__q"),
@@ -279,132 +277,42 @@ def mmr_select(
 
     ``candidates`` is a per-query frame (query, id, vec, rel) that is
     ALREADY bounded (a retrieval arm's top-N) — MMR is quadratic in
-    the candidate count by definition, so the operator materializes
-    the per-query pairwise cosine matrix once (≤ n_queries · N² rows,
-    never corpus-scale) and runs ``k`` plan-flat greedy steps over
-    it.  Each step's pick and the shrinking remainder are
-    ``localCheckpoint``ed: candidate-scale frames, executor-side, so
-    plan depth stays O(1) per step instead of exponential in ``k``
-    (the iterative-lineage trap; same treatment as operators/bpe.py).
+    the candidate count by definition.  It is also parallel BY QUERY
+    (each query's greedy selection touches only its own candidates),
+    so the candidate frame and the once-materialized pairwise-cosine
+    frame (``_mmr_frames`` — the float math stays in the JVM) cogroup
+    on the query key and the selection loop runs in-process in an
+    Arrow cogrouped-map: ONE shuffle, one job, per-group memory
+    bounded by N + N² rows.
 
-    Determinism: rel must arrive 6dp-rounded; pairwise sims and step
-    scores round to 6dp; ties break on lowest id.  ``best_sim`` is
-    seeded at −1.0 (below any cosine) so one uniform score formula
-    covers step 1 — a constant per-query offset that cannot change
-    the argmax — which lets a DuckDB unrolled-CTE oracle replay every
-    pick exactly.  Returns (query, id, mmr_rank 1..k, rel)."""
-    base, sim = _mmr_frames(candidates, query_col, id_col, vec_col, rel_col)
-    # sim descends from the same base as rem; rename its join columns
-    # so the per-step condition below is attribute-unambiguous (the
-    # dataset-id disambiguation resolves df["c"] == df2["c"] self-join
-    # references correctly, but only after warning on every step).
-    sim = sim.select(
-        F.col("__q").alias("__sq"),
-        F.col("__ida").alias("__sida"),
-        F.col("__idb").alias("__sidb"),
-        "__sim",
-    ).localCheckpoint(eager=True)
-    om = 1.0 - lam
-    rem = base.select(
-        "__q", "__id", "__rel", F.lit(-1.0).alias("__bs")
-    ).localCheckpoint(eager=True)
-    picked = []
-    for i in range(1, k + 1):
-        w = Window.partitionBy("__q").orderBy(
-            F.col("__score").desc(), F.col("__id").asc()
-        )
-        sel = (
-            rem.withColumn(
-                "__score",
-                F.round(F.lit(lam) * F.col("__rel") - F.lit(om) * F.col("__bs"), 6),
-            )
-            .withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .select("__q", "__id", "__rel", F.lit(i).alias("mmr_rank"))
-            .localCheckpoint(eager=True)
-        )
-        picked.append(sel)
-        if i < k:
-            rem = (
-                rem.join(
-                    sel.select("__q", F.col("__id").alias("__sel")), "__q"
-                )
-                .filter(F.col("__id") != F.col("__sel"))
-                .join(
-                    sim,
-                    (F.col("__sq") == F.col("__q"))
-                    & (F.col("__sida") == F.col("__id"))
-                    & (F.col("__sidb") == F.col("__sel")),
-                )
-                .select(
-                    "__q", "__id", "__rel",
-                    F.greatest(F.col("__bs"), F.col("__sim")).alias("__bs"),
-                )
-                .localCheckpoint(eager=True)
-            )
-    out = reduce(DataFrame.unionByName, picked)
-    return out.select(
-        F.col("__q").alias(query_col),
-        F.col("__id").alias(id_col),
-        "mmr_rank",
-        F.col("__rel").alias(rel_col),
-    )
-
-
-def mmr_select_grouped(
-    candidates: DataFrame,
-    query_col: str,
-    id_col: str,
-    vec_col: str,
-    rel_col: str,
-    k: int = 5,
-    lam: float = 0.7,
-) -> DataFrame:
-    """``mmr_select`` with the greedy loop executed per query group in
-    an Arrow cogrouped-map (``cogroup(...).applyInPandas``) instead of
-    ``k`` driver-coordinated plan-flat steps.
-
-    Same semantics, different execution strategy — and the one that is
-    right at scale: MMR is embarrassingly parallel BY QUERY (each
-    query's greedy selection touches only its own bounded candidate
-    list), so with millions of in-flight queries the plan-flat path's
-    ``k`` global jobs — each an eager ``localCheckpoint`` barrier over
-    ALL queries — pay ``~2k`` fixed job latencies for no cross-query
-    benefit.  Here the candidate frame and the ONCE-materialized
-    pairwise-cosine frame (both produced by the exact expressions of
-    ``_mmr_frames`` — the heavy float math never leaves the JVM)
-    cogroup on the query key, and the per-query selection loop runs
-    in-process over the two small pandas frames: ONE shuffle, one job,
-    per-group memory bounded by the candidate cap (N + N² rows).
-
-    Bit-parity with ``mmr_select``: the inputs to the greedy loop (rel
-    and 6dp-rounded sims) are the same JVM-computed doubles; the step
-    score replays Spark's ``round(lam·rel − (1−lam)·bs, 6)`` exactly —
-    ``java.math.BigDecimal.valueOf(double).setScale(6, HALF_UP)`` ≡
-    ``Decimal(repr(x)).quantize(1e-6, ROUND_HALF_UP)`` (both round the
-    SHORTEST decimal rendering of the double, not its exact binary
-    expansion), and IEEE evaluation order matches the plan-flat
-    expression tree.  Ties break on lowest id; ``best_sim`` seeds at
-    −1.0; picking stops when candidates run out (k may exceed N).
-    Zero-norm vectors (NaN cosine) are outside the contract of both
-    paths — candidates arrive from a cosine-scored arm.
-    Proven equivalent on real data by tests/test_retrieval.py's
-    differential sweep.  Returns (query, id, mmr_rank 1..k, rel)."""
+    Determinism: rel must arrive 6dp-rounded; pairwise sims are
+    6dp-rounded; the step score rounds to 6dp the way Spark's
+    ``round(x, 6)`` does — ``BigDecimal.valueOf(double).setScale(6,
+    HALF_UP)`` ≡ ``Decimal(repr(x)).quantize(1e-6, ROUND_HALF_UP)``
+    (both round the SHORTEST decimal rendering of the double).  Ties
+    break on lowest id; ``best_sim`` is seeded at −1.0 (below any
+    cosine) so one uniform score formula covers step 1 — a constant
+    per-query offset that cannot change the argmax — which lets a
+    DuckDB unrolled-CTE oracle (``queries/vectors._mmr_ctes``) replay
+    every pick exactly.  Picking stops when candidates run out (k may
+    exceed N).  Zero-norm vectors (NaN cosine) are outside the
+    contract — candidates arrive from a cosine-scored arm.
+    Returns (query, id, mmr_rank 1..k, rel), rel typed like the
+    input column."""
     import pandas as pd
 
     base, sim = _mmr_frames(candidates, query_col, id_col, vec_col, rel_col)
     # LAZY lineage break (plan becomes a LogicalRDD, materialized
     # inside the same action): cand and sim share `candidates`'
     # attribute ids, which trips the ambiguous-self-join check when
-    # both sides cogroup on __q. No eager job — unlike the plan-flat
-    # path there is no iteration here, so lineage depth is not the
-    # concern, only attribute identity.
+    # both sides cogroup on __q. No eager job — there is no iteration
+    # here, so lineage depth is not the concern, only attribute
+    # identity.
     sim = sim.localCheckpoint(eager=False)
     cand = base.select("__q", "__id", "__rel")
     q_t = candidates.schema[query_col].dataType.simpleString()
     id_t = candidates.schema[id_col].dataType.simpleString()
-    # rel's output type follows the input column (like __q/__id) so the
-    # twins stay schema-identical for non-double rel inputs too
+    # rel's output type follows the input column (like __q/__id)
     rel_t = candidates.schema[rel_col].dataType.simpleString()
     out_schema = (
         f"`__q` {q_t}, `__id` {id_t}, mmr_rank int, `__rel` {rel_t}"
@@ -445,9 +353,8 @@ def mmr_select_grouped(
             remaining.discard(pick)
             for i in remaining:
                 # .get, not []: an out-of-contract missing sim pair
-                # (duplicate ids upstream) degrades the same way the
-                # plan-flat path does (row's best_sim unchanged)
-                # instead of raising KeyError
+                # (duplicate ids upstream) leaves the row's best_sim
+                # unchanged instead of raising KeyError
                 s = simm.get((i, pick))
                 if s is not None and s > bs[i]:
                     bs[i] = s

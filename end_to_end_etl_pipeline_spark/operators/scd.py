@@ -34,7 +34,6 @@ import datetime as _dt
 import functools
 import operator
 from collections.abc import Sequence
-from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -95,17 +94,6 @@ def prepare_scd_source(
                 "or dedup upstream"
             )
     return src
-
-
-@dataclass
-class SCDConfig:
-    """Config-driven SCD binding (the reference drives this from JSON,
-    ``medallion/silver/config_yfinance.json:5-58``)."""
-
-    table: str
-    business_keys: Sequence[str]
-    tracked_columns: Sequence[str]
-    scd_type: int = 2
 
 
 class SCDEngine:

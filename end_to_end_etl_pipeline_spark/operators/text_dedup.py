@@ -82,23 +82,6 @@ def word_shingles(
     return df.select(F.col(id_col), F.expr(f"explode({arr}) AS shingle"))
 
 
-def minhash_signatures(
-    shingles: DataFrame, id_col: str, num_hashes: int = 16
-) -> DataFrame:
-    """One row per id with columns ``m0..m{K-1}``: the lexicographic
-    min of ``md5(k || ':' || shingle)`` per seed. One shuffle with
-    map-side partial ``min`` — signature width is K×32 bytes
-    regardless of document size. (Simple form: K md5s per shingle;
-    the hot path uses :func:`minhash_signatures_cw` /
-    :func:`band_hashes_arr` — one md5 per shingle, Carter-Wegman
-    derived family.)"""
-    aggs = [
-        F.min(F.md5(F.concat(F.lit(f"{k}:"), F.col("shingle")))).alias(f"m{k}")
-        for k in range(num_hashes)
-    ]
-    return shingles.groupBy(id_col).agg(*aggs)
-
-
 def shingle_array(
     df: DataFrame, id_col: str, text_col: str, n: int = 6
 ) -> DataFrame:

@@ -1507,9 +1507,8 @@ def _mmr_ctes(k: int, lam: float) -> str:
     return ",\n    ".join(parts)
 
 
-#: shared by the plan-flat query and its grouped-map twin — ONE
-#: oracle, two execution strategies, so a result divergence between
-#: them cannot hide behind oracle drift.
+#: shared by both registered MMR queries — ONE oracle, so a result
+#: divergence between them cannot hide behind oracle drift.
 _MMR_ORACLE = f"""
     WITH qv AS (SELECT vec_id - 100 AS query_id, CAST(embedding AS DOUBLE[]) AS qv
                 FROM embeddings WHERE vec_id BETWEEN 100 AND 104),
@@ -1536,10 +1535,12 @@ _MMR_ORACLE = f"""
     """.format(mmr=_mmr_ctes(5, 0.7))
 
 
-def _mmr_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shared candidate build for both MMR conformance queries: 5
-    query vectors, exact-cosine top-20 each, vectors re-joined for
-    the pairwise-sim step."""
+def _mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Both MMR conformance queries: 5 query vectors, exact-cosine
+    top-20 each, vectors re-joined for the pairwise-sim step, then a
+    5-pick MMR at lam=0.7."""
+    from end_to_end_etl_pipeline_spark.operators.retrieval import mmr_select
+
     emb = load(spark, sf_dir, "embeddings")
     qvecs = emb.filter(F.col("vec_id").between(100, 104)).select(
         (F.col("vec_id") - 100).alias("query_id"), "embedding"
@@ -1547,8 +1548,15 @@ def _mmr_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = cosine_topk(
         qvecs, emb, "query_id", "vec_id", "embedding", k=20, exclude_self=False
     )
-    return cand.join(
+    candv = cand.join(
         emb.select(F.col("vec_id").alias("match_id"), "embedding"), "match_id"
+    )
+    out = mmr_select(
+        candv, "query_id", "match_id", "embedding", "cosine", k=5, lam=0.7
+    )
+    return out.select(
+        "query_id", F.col("match_id").alias("doc_id"), "mmr_rank",
+        F.col("cosine").alias("rel"),
     )
 
 
@@ -1560,61 +1568,35 @@ def _mmr_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     "window diversification step of a RAG stack: from each query's "
     "exact-cosine top-20 candidates, greedily pick 5 by "
     "0.7*rel - 0.3*max_cosine_to_already_picked, so near-duplicate "
-    "passages don't crowd out coverage. Pure-DataFrame unrolled "
-    "greedy (k plan-flat steps, each pick localCheckpointed at "
-    "n_queries scale - the BPE/Lloyd's iterative pattern), pairwise "
-    "candidate sims materialized ONCE at candidate scale (<= q*N^2, "
-    "never corpus scale). Scores 6dp, ties to lowest doc_id, "
-    "best_sim seeded at -1.0 so one score formula covers step 1 "
-    "(constant per-query offset, argmax unchanged) - the DuckDB "
-    "oracle unrolls the identical 5 steps and replays every pick "
-    "exactly.",
+    "passages don't crowd out coverage. Pairwise candidate sims are "
+    "materialized ONCE at candidate scale (<= q*N^2, never corpus "
+    "scale). Scores 6dp, ties to lowest doc_id, best_sim seeded at "
+    "-1.0 so one score formula covers step 1 (constant per-query "
+    "offset, argmax unchanged) - the DuckDB oracle unrolls the "
+    "identical 5 steps and replays every pick exactly.",
     tags=("north-star", "vectors", "search"),
 )
 def mmr_diverse_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from end_to_end_etl_pipeline_spark.operators.retrieval import mmr_select
-
-    candv = _mmr_candidates(spark, sf_dir)
-    out = mmr_select(
-        candv, "query_id", "match_id", "embedding", "cosine", k=5, lam=0.7
-    )
-    return out.select(
-        "query_id", F.col("match_id").alias("doc_id"), "mmr_rank",
-        F.col("cosine").alias("rel"),
-    )
+    return _mmr_rerank(spark, sf_dir)
 
 
 @register(
     "mmr_diverse_rerank_grouped",
     oracle=_MMR_ORACLE,
-    doc="The SAME maximal-marginal-relevance re-rank as "
-    "mmr_diverse_rerank, executed by the scale-right strategy "
-    "(operators/retrieval.mmr_select_grouped): MMR is parallel BY "
-    "QUERY — each query's greedy loop touches only its own bounded "
-    "top-20 — so instead of k global plan-flat steps (each an eager "
-    "localCheckpoint barrier over all queries, ~2k fixed job "
-    "latencies), the JVM-computed candidates and pairwise 6dp "
+    doc="The same maximal-marginal-relevance re-rank as "
+    "mmr_diverse_rerank (operators/retrieval.mmr_select), registered "
+    "under the name of its per-query execution: MMR is parallel BY "
+    "QUERY - each query's greedy loop touches only its own bounded "
+    "top-20 - so the JVM-computed candidates and pairwise 6dp "
     "cosines cogroup on the query key and the selection loop runs "
     "in an Arrow cogrouped-map: ONE shuffle, one job, per-group "
-    "memory <= N + N^2. Both twins answer to the identical unrolled-"
-    "CTE DuckDB oracle, so the strategies are provably "
-    "interchangeable; the step-score replays Spark's "
-    "BigDecimal-HALF_UP rounding exactly.",
+    "memory <= N + N^2. Answers to the same unrolled-CTE DuckDB "
+    "oracle; the step score replays Spark's BigDecimal-HALF_UP "
+    "rounding exactly.",
     tags=("vectors", "search"),
 )
 def mmr_diverse_rerank_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from end_to_end_etl_pipeline_spark.operators.retrieval import (
-        mmr_select_grouped,
-    )
-
-    candv = _mmr_candidates(spark, sf_dir)
-    out = mmr_select_grouped(
-        candv, "query_id", "match_id", "embedding", "cosine", k=5, lam=0.7
-    )
-    return out.select(
-        "query_id", F.col("match_id").alias("doc_id"), "mmr_rank",
-        F.col("cosine").alias("rel"),
-    )
+    return _mmr_rerank(spark, sf_dir)
 
 
 @register(

@@ -29,6 +29,18 @@ def _local_cores() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
 
 
+def _driver_memory() -> str:
+    """``spark.driver.memory``: ``SPARK_GRAFT_DRIVER_MEM`` when set,
+    else min(16g, half the physical RAM). A heap sized past the RAM
+    of a machine without swap ends in an OOM kill of the JVM instead
+    of a Java OutOfMemoryError."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(16 * 1024, phys // 2 // 2**20)}m"
+
+
 def create_spark_session(
     app_name: str = "end_to_end_etl_pipeline_spark",
     master: str | None = None,
@@ -65,7 +77,7 @@ def create_spark_session(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", _driver_memory())
     )
     if master:
         builder = builder.master(master)

@@ -131,8 +131,8 @@ def test_no_python_row_udfs_in_batch_queries(spark):
         # round-5 additions (crossencoder_rerank_topk uses the
         # sanctioned MapInPandas escape — still never BatchEvalPython)
         "hybrid_doc_retrieval",
+        # both MMR names: cogrouped Arrow (FlatMapCoGroupsInPandas)
         "mmr_diverse_rerank",
-        # grouped-map twin: cogrouped Arrow (FlatMapCoGroupsInPandas)
         "mmr_diverse_rerank_grouped",
         "crossencoder_rerank_topk",
         "hard_negative_mining",
@@ -553,3 +553,27 @@ def test_pairwise_ce_gradient_step_is_one_codegen_aggregate(spark):
     # physical Exchange == 2 mentions; partial->final agg only
     assert plan.count("Exchange") <= 2, plan
     assert "HashAggregate" in plan
+
+
+#: jobs each MMR query may take at the test SF, measured with
+#: collect() under a job group at sf0.01 (9 at 1, 4 and 8 cores, and
+#: at sf0.1). Raising a ceiling is a CHANGES.md event.
+MMR_JOB_CEILING = {
+    "mmr_diverse_rerank": 9,
+    "mmr_diverse_rerank_grouped": 9,
+}
+
+
+def test_mmr_job_count_ceiling(spark):
+    sc = spark.sparkContext
+    try:
+        for name, ceiling in MMR_JOB_CEILING.items():
+            group = f"test_mmr_job_count_ceiling:{name}"
+            sc.setJobGroup(group, group)
+            rows = REGISTRY[name].spark(spark, SF).collect()
+            jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+            assert rows, name
+            assert jobs <= ceiling, (name, jobs, ceiling)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)

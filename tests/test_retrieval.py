@@ -268,17 +268,23 @@ def test_retrieval_stack_invariants_randomized(spark):
     assert len(picks) == 3 * 4
 
 
-def test_mmr_grouped_differential_matches_plan_flat(spark):
-    """The grouped-map strategy must replay the plan-flat picks
+def test_mmr_matches_duckdb_greedy_replay(spark):
+    """mmr_select must replay the DuckDB unrolled-CTE greedy
+    (queries/vectors._mmr_ctes, the registered queries' oracle)
     EXACTLY — same ids, ranks, and rel doubles — on a randomized
     fixed-seed candidate set big enough to exercise real greedy
-    interaction (3 queries x 25 candidates, k=6 > some tie room)."""
+    interaction (3 queries x 25 candidates, k=6). Both sides read the
+    same candidates and the same pairwise sims (``_mmr_frames``), so
+    the comparison isolates the selection loop."""
     import random
 
+    import duckdb
+
     from end_to_end_etl_pipeline_spark.operators.retrieval import (
+        _mmr_frames,
         mmr_select,
-        mmr_select_grouped,
     )
+    from end_to_end_etl_pipeline_spark.queries.vectors import _mmr_ctes
 
     rng = random.Random(13)
     dim = 8
@@ -291,20 +297,29 @@ def test_mmr_grouped_differential_matches_plan_flat(spark):
     cand = spark.createDataFrame(
         rows, "query_id bigint, doc_id bigint, v array<double>, rel double"
     )
-    flat = mmr_select(cand, "query_id", "doc_id", "v", "rel", k=6, lam=0.7)
-    grp = mmr_select_grouped(
+    got = sorted(map(tuple, mmr_select(
         cand, "query_id", "doc_id", "v", "rel", k=6, lam=0.7
-    )
-    f = sorted(map(tuple, flat.collect()))
-    g = sorted(map(tuple, grp.collect()))
-    assert f == g
-    assert len(f) == 3 * 6
+    ).collect()))
+
+    _, sim = _mmr_frames(cand, "query_id", "doc_id", "v", "rel")
+    con = duckdb.connect()
+    con.register("cand", cand.select("query_id", "doc_id", "rel").toPandas())
+    con.register("sims", sim.toPandas())
+    ref = con.execute(f"""
+    WITH candv AS (SELECT query_id, doc_id, rel FROM cand),
+    msim AS (
+      SELECT __q AS query_id, __ida AS id_a, __idb AS id_b, __sim AS sim
+      FROM sims
+    ),
+    {_mmr_ctes(6, 0.7)}
+    SELECT query_id, doc_id, mmr_rank, rel FROM mmr_sel
+    """).fetchall()
+    assert got == sorted(ref)
+    assert len(got) == 3 * 6
 
 
 def test_mmr_grouped_handles_k_past_candidates_and_plan(spark):
-    from end_to_end_etl_pipeline_spark.operators.retrieval import (
-        mmr_select_grouped,
-    )
+    from end_to_end_etl_pipeline_spark.operators.retrieval import mmr_select
 
     cand = spark.createDataFrame(
         [
@@ -316,9 +331,10 @@ def test_mmr_grouped_handles_k_past_candidates_and_plan(spark):
         ],
         "query_id bigint, doc_id bigint, v array<double>, rel double",
     )
-    out = mmr_select_grouped(cand, "query_id", "doc_id", "v", "rel", k=5, lam=0.5)
+    out = mmr_select(cand, "query_id", "doc_id", "v", "rel", k=5, lam=0.5)
     rows = out.collect()
-    # query 0: same hand-computed order as the plan-flat unit test;
+    # query 0: same hand-computed order as
+    # test_mmr_diversifies_over_pure_relevance;
     # query 1: a single candidate, no sim pairs at all
     order = [r["doc_id"] for r in sorted(
         (r for r in rows if r["query_id"] == 0), key=lambda r: r["mmr_rank"])]
@@ -386,28 +402,27 @@ def test_ndcg_zero_retrieval_query_scores_zero(spark):
 
 
 def test_mmr_grouped_preserves_non_double_rel_type(spark):
-    """The twins must stay schema-identical for non-double rel inputs
-    (the grouped path used to hardcode `__rel double`)."""
-    from end_to_end_etl_pipeline_spark.operators.retrieval import (
-        mmr_select,
-        mmr_select_grouped,
-    )
+    """rel's output type follows the input column, not a hardcoded
+    double."""
+    from pyspark.sql.types import FloatType, IntegerType, LongType
+
+    from end_to_end_etl_pipeline_spark.operators.retrieval import mmr_select
 
     cand = spark.createDataFrame(
         [(0, 1, [1.0, 0.0], 0.5), (0, 2, [0.0, 1.0], 0.25)],
         "query_id bigint, doc_id bigint, v array<double>, rel double",
     ).withColumn("rel", F.col("rel").cast("float"))
-    flat = mmr_select(cand, "query_id", "doc_id", "v", "rel", k=2)
-    grp = mmr_select_grouped(cand, "query_id", "doc_id", "v", "rel", k=2)
-    # dtype parity (nullability differs benignly: Arrow-map output
-    # columns are always nullable, row_number's is not)
-    assert [(f.name, f.dataType) for f in grp.schema.fields] == [
-        (f.name, f.dataType) for f in flat.schema.fields
+    out = mmr_select(cand, "query_id", "doc_id", "v", "rel", k=2)
+    # dtypes only: Arrow-map output columns are always nullable
+    assert [(f.name, f.dataType) for f in out.schema.fields] == [
+        ("query_id", LongType()),
+        ("doc_id", LongType()),
+        ("mmr_rank", IntegerType()),
+        ("rel", FloatType()),
     ]
-    assert grp.schema["rel"].dataType.simpleString() == "float"
-    assert sorted(map(tuple, grp.collect())) == sorted(
-        map(tuple, flat.collect())
-    )
+    assert sorted(map(tuple, out.collect())) == [
+        (0, 1, 1, 0.5), (0, 2, 2, 0.25),
+    ]
 
 
 def test_pairwise_ce_features_jvm_matches_pandas_contract(spark):
